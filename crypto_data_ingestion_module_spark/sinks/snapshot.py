@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import json
 import uuid
-from collections.abc import Sequence
+from collections.abc import Collection, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,6 +131,52 @@ def _partition_of(rel_file: str, partition_cols: Sequence[str]) -> str:
     ``symbol=BTC/.../date=x`` partition key string."""
     parts = [p for p in rel_file.split("/") if "=" in p]
     return "/".join(parts)
+
+
+def _group_files(
+    files: list[str], partition_cols: Sequence[str]
+) -> dict[str, list[str]]:
+    """Root-relative data files → ``{partition key: files}``."""
+    parts: dict[str, list[str]] = {}
+    for f in files:
+        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
+    return parts
+
+
+def _swap_partitions(
+    manifest: dict,
+    dropped: Collection[str],
+    new_files: list[str],
+    new_stats: dict,
+    partition_cols: Sequence[str],
+) -> tuple[dict, dict]:
+    """The next manifest's ``(partitions, file_stats)``: the previous
+    snapshot minus the ``dropped`` partitions, plus ``new_files``.  Kept
+    files keep their stats; new files take theirs from ``new_stats``."""
+    parts = {
+        k: list(fl)
+        for k, fl in manifest["partitions"].items()
+        if k not in dropped
+    }
+    kept = {f for fl in parts.values() for f in fl}
+    for k, fl in _group_files(new_files, partition_cols).items():
+        parts.setdefault(k, []).extend(fl)
+    stats = {
+        f: st
+        for f, st in manifest.get("file_stats", {}).items()
+        if f in kept
+    }
+    stats.update(new_stats)
+    return parts, stats
+
+
+def _partition_keys(df: DataFrame, partition_cols: Sequence[str]) -> set[str]:
+    """The ``col=value/...`` partition keys ``df``'s rows land in — one
+    distinct job over the partition columns only."""
+    return {
+        "/".join(f"{c}={r[c]}" for c in partition_cols)
+        for r in df.select(*partition_cols).distinct().collect()
+    }
 
 
 #: Partition values are DUPLICATED into the data files under this prefix
@@ -304,6 +350,15 @@ def snapshot_files(spark: SparkSession, root: str,
     return [f for fl in man["partitions"].values() for f in fl]
 
 
+def _input_file_rel(path: str, base_abs: str) -> str:
+    """An ``input_file_name()`` URI → its path relative to the lake root
+    (``base_abs``: the root's qualified absolute path)."""
+    if "://" in path:
+        path = path.split("://", 1)[1]
+        path = path[path.index("/"):] if not path.startswith("/") else path
+    return path[len(base_abs):].lstrip("/")
+
+
 def _file_time_stats(
     spark: SparkSession, root: str, files: list[str], ts_col: str = "timestamp"
 ) -> dict:
@@ -323,11 +378,7 @@ def _file_time_stats(
     for r in df.groupBy("_f").agg(
         F.min("_us").alias("lo"), F.max("_us").alias("hi")
     ).collect():
-        p = r["_f"]
-        if "://" in p:
-            p = p.split("://", 1)[1]
-            p = p[p.index("/"):] if not p.startswith("/") else p
-        rel = p[len(base_abs):].lstrip("/")
+        rel = _input_file_rel(r["_f"], base_abs)
         out[rel] = {"ts_min_us": int(r["lo"]), "ts_max_us": int(r["hi"])}
     return out
 
@@ -441,11 +492,7 @@ def _file_col_stats(
         .collect()
     )
     for r in rows:
-        p = r["_f"]
-        if "://" in p:
-            p = p.split("://", 1)[1]
-            p = p[p.index("/"):] if not p.startswith("/") else p
-        rel = p[len(base_abs):].lstrip("/")
+        rel = _input_file_rel(r["_f"], base_abs)
         out[rel] = {
             "cols": {c: [r[f"_lo_{c}"], r[f"_hi_{c}"]] for c in cols}
         }
@@ -696,13 +743,14 @@ def init_snapshot_lake(
 ) -> int:
     """Bootstrap version 1 from an initial batch."""
     df = _with_date(df)
-    if INGEST_SEQ not in df.columns:
+    seq_max = 0
+    if INGEST_SEQ in df.columns:
+        seq_max = df.agg(F.max(INGEST_SEQ).alias("m")).first()["m"]
+    else:
+        # constant stamp: no need to evaluate the batch a second time
         df = df.withColumn(INGEST_SEQ, F.lit(0).cast("long"))
     files = _write_data_files(spark, df, root, partition_cols)
-    parts: dict[str, list[str]] = {}
-    for f in files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    seq_max = df.agg(F.max(INGEST_SEQ).alias("m")).first()["m"]
+    parts = _group_files(files, partition_cols)
     commit_version(
         spark,
         root,
@@ -782,9 +830,7 @@ def _snapshot_merge_once(
     if v is None:
         merged = merge_fn(None, incoming)
         files = _write_data_files(spark, merged, root, partition_cols)
-        parts: dict[str, list[str]] = {}
-        for f in files:
-            parts.setdefault(_partition_of(f, partition_cols), []).append(f)
+        parts = _group_files(files, partition_cols)
         man1 = {
             "version": 1,
             "partitions": parts,
@@ -816,29 +862,15 @@ def _snapshot_merge_once(
     # and per-run only: nothing persists across invocations.
     incoming = incoming.localCheckpoint(eager=False)
 
-    touched_keys = {
-        "/".join(f"{c}={r[c]}" for c in partition_cols)
-        for r in incoming.select(*partition_cols).distinct().collect()
-    }
+    touched_keys = _partition_keys(incoming, partition_cols)
     schema = _manifest_schema(spark, root, manifest, v)
     current_touched = _read_touched(spark, root, manifest, touched_keys, schema)
     merged = merge_fn(current_touched, incoming)
     new_files = _write_data_files(spark, merged, root, partition_cols)
-
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in touched_keys
-    }
-    kept = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept
-    }
-    stats.update(_stats_for(spark, root, new_files, merged, ts_col))
+    parts, stats = _swap_partitions(
+        manifest, touched_keys, new_files,
+        _stats_for(spark, root, new_files, merged, ts_col), partition_cols,
+    )
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     new_manifest = {
         "version": v + 1,
@@ -906,11 +938,10 @@ def _snapshot_append_once(
     evolved = _evolve_schema(cur_schema, df.schema)
     df = _conform(df, evolved)
     new_files = _write_data_files(spark, df, root, partition_cols)
-    parts = {k: list(fl) for k, fl in manifest["partitions"].items()}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = dict(manifest.get("file_stats", {}))
-    stats.update(_stats_for(spark, root, new_files, df, ts_col))
+    parts, stats = _swap_partitions(
+        manifest, (), new_files,
+        _stats_for(spark, root, new_files, df, ts_col), partition_cols,
+    )
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     new_manifest = {
         "version": v + 1,
@@ -978,9 +1009,7 @@ def _snapshot_overwrite_once(
         ):
             return v
     new_files = _write_data_files(spark, df, root, partition_cols)
-    parts: dict[str, list[str]] = {}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
+    parts = _group_files(new_files, partition_cols)
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     new_manifest = {
         "version": (v or 0) + 1,
@@ -1069,6 +1098,15 @@ def _snapshot_upsert_once(
     if applied_id is not None and applied_id in manifest.get("applied_ids", []):
         return v
 
+    # `incoming` feeds two jobs below (touched-keys collect, then the
+    # merge+write; a third, its max _ingest_seq, when it carries one).
+    # Uncut, each job re-runs its whole plan: a fetched batch re-requests
+    # every page, and a venue whose answer changed in between lands rows
+    # in partitions missing from touched_keys, whose old files then stay
+    # live beside the new ones (duplicate logical keys).  The cut makes
+    # every job read one evaluation; it is lazy and per-run only.
+    incoming = incoming.localCheckpoint(eager=False)
+
     incoming = _with_date(incoming)
     cur_schema = _manifest_schema(spark, root, manifest, v)
     if batch_seq is None:
@@ -1094,10 +1132,7 @@ def _snapshot_upsert_once(
     # a migration, not an upsert.
     evolved = _evolve_schema(cur_schema, incoming.schema)
 
-    touched_keys = {
-        "/".join(f"{c}={r[c]}" for c in partition_cols)
-        for r in incoming.select(*partition_cols).distinct().collect()
-    }
+    touched_keys = _partition_keys(incoming, partition_cols)
     current_touched = _read_touched(
         spark, root, manifest, touched_keys, cur_schema
     )
@@ -1109,21 +1144,10 @@ def _snapshot_upsert_once(
         order_col=INGEST_SEQ,
     )
     new_files = _write_data_files(spark, merged, root, partition_cols)
-
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in touched_keys
-    }
-    kept = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept
-    }
-    stats.update(_file_time_stats(spark, root, new_files))
+    parts, stats = _swap_partitions(
+        manifest, touched_keys, new_files,
+        _file_time_stats(spark, root, new_files), partition_cols,
+    )
     if incoming_had_seq:
         row = incoming.agg(F.max(INGEST_SEQ).alias("m")).first()
         seq_now = int(row["m"] or 0)
@@ -1204,14 +1228,9 @@ def _snapshot_delete_once(
     if applied_id is not None and applied_id in manifest.get("applied_ids", []):
         return v, 0
 
-    touched_keys = {
-        "/".join(f"{c}={r[c]}" for c in partition_cols)
-        for r in read_snapshot(spark, root, v)
-        .filter(predicate)
-        .select(*partition_cols)
-        .distinct()
-        .collect()
-    }
+    touched_keys = _partition_keys(
+        read_snapshot(spark, root, v).filter(predicate), partition_cols
+    )
     if not touched_keys:
         return v, 0
     schema = _manifest_schema(spark, root, manifest, v)
@@ -1223,21 +1242,10 @@ def _snapshot_delete_once(
     )
     n_deleted = current_touched.count() - kept.count()
     new_files = _write_data_files(spark, kept, root, partition_cols)
-
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in touched_keys
-    }
-    kept_files = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept_files
-    }
-    stats.update(_stats_for(spark, root, new_files, kept, ts_col))
+    parts, stats = _swap_partitions(
+        manifest, touched_keys, new_files,
+        _stats_for(spark, root, new_files, kept, ts_col), partition_cols,
+    )
     applied, evicted, frozen = _applied_ids_next(manifest, applied_id)
     commit_version(
         spark,
@@ -1406,20 +1414,10 @@ def compact_snapshot(
     )
     compacted = doomed.repartition(*[F.col(c) for c in partition_cols])
     new_files = _write_data_files(spark, compacted, root, partition_cols, cluster=False)
-    parts = {
-        k: fl
-        for k, fl in manifest["partitions"].items()
-        if k not in breached
-    }
-    kept = {f for fl in parts.values() for f in fl}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
-    stats = {
-        f: st
-        for f, st in manifest.get("file_stats", {}).items()
-        if f in kept
-    }
-    stats.update(_file_time_stats(spark, root, new_files))
+    parts, stats = _swap_partitions(
+        manifest, breached, new_files,
+        _file_time_stats(spark, root, new_files), partition_cols,
+    )
     commit_version(
         spark,
         root,
@@ -1517,9 +1515,7 @@ def _optimize_zorder_once(
         .drop("_z")
     )
     new_files = _write_data_files(spark, clustered, root, partition_cols, cluster=False)
-    parts: dict[str, list[str]] = {}
-    for f in new_files:
-        parts.setdefault(_partition_of(f, partition_cols), []).append(f)
+    parts = _group_files(new_files, partition_cols)
     stats = _file_time_stats(spark, root, new_files, ts_col=ts_col)
     for f, cst in _file_col_stats(spark, root, new_files, zcols).items():
         stats.setdefault(f, {}).update(cst)

@@ -14,6 +14,21 @@ Error handling (T7, reference 136-138/586-587): a failing fetch yields an
 empty page plus a quarantine row (exchange, error) — log-and-continue,
 never a failed task.
 
+Fetch once: every manifest row reaches the venue exactly once per
+``fetch_pages`` call.  The fetched pages sit behind a lazy local
+checkpoint, so every action on the result (and on frames derived from
+it: normalized candles, the quarantine side channel, the upsert's
+touched-partition scan and its merge write) reads the one fetched copy
+instead of re-running the shuffle and the adapter.  Re-running them per
+action would spend the venue's pacing budget several times over, and a
+venue that changed between two requests could hand the upsert other
+rows than the ones it planned its touched partitions from.  The
+trade-off: checkpointed blocks live on the executors and are not
+recomputed when one is lost — the job then fails instead of silently
+re-requesting the pages.  A retried run is cheap: the incremental
+manifest clamps it to the series watermarks, so only uncommitted
+buckets are fetched again.
+
 Adapters are injectable: ``MockExchangeAdapter`` replays deterministic
 synthetic pages (no network, used by tests/bench); ``HttpExchangeAdapter``
 is the thin real-world binding (same URL/params surface as the reference).
@@ -136,6 +151,11 @@ def fetch_pages(
     per-partition token bucket serializes each venue's requests.  Returns
     RAW_SCHEMA rows: kline pages flattened, plus quarantine rows
     (kline=NULL, error set) for failed tasks.
+
+    The result is lazily checkpointed: nothing is fetched until its first
+    action, which fetches every page once; every later action reads those
+    blocks.  Losing an executor that holds them fails the job rather than
+    re-requesting the pages (see the module docstring).
     """
     pacing = pacing or {}
 
@@ -174,7 +194,9 @@ def fetch_pages(
             yield pd.DataFrame(rows, columns=[f.name for f in RAW_SCHEMA.fields])
 
     partitioned = manifest.repartition("exchange")
-    return partitioned.mapInPandas(kernel, schema=RAW_SCHEMA)
+    return partitioned.mapInPandas(kernel, schema=RAW_SCHEMA).localCheckpoint(
+        eager=False
+    )
 
 
 #: Mock kline layout is ms-epoch [ts, o, h, l, c, v] — Bitfinex-shaped but
